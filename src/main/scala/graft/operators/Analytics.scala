@@ -602,43 +602,43 @@ object Analytics {
     * EXACT-INTEGER discipline (the F19 micro-unit rule): ranks live in
     * micro-units (r₀ = 1,000,000), damping 0.85 as the exact rational
     * 17/20, per-edge contribution = (r·17·w) div (20·W_out) in int64
-    * (floor ≡ truncation on positives, so Spark's `div` and DuckDB's
-    * `//` agree bit-for-bit), teleport = 150,000 — the whole k-round
+    * (floor ≡ truncation on positives, so the loop's long division and
+    * DuckDB's `//` agree bit-for-bit), teleport = 150,000 — the whole k-round
     * fixpoint replays exactly as k chained CTEs. Symmetric two-node
     * check: r stays exactly 1,000,000 (850,000 + 150,000), so the
     * quantization introduces no drift on regular graphs.
     *
-    * Scale shape — the canonical Spark PageRank layout: edges build
-    * once (pair-dedup agg + an explicit src repartition), then
-    * CACHE — an InMemoryRelation preserves its outputPartitioning
-    * through AQE, so every round's rank join finds the edge side
-    * already hash-partitioned by src and NEVER re-shuffles the
-    * edge-scale relation (localCheckpoint would lose the partitioning
-    * under AQE and re-exchange edges every round — measured 3 exchanges vs
-    * 1 with AQE off; the cache is robust to both settings). Per round
-    * only node-sized data moves: the rank table to the edges'
-    * partitioning and the inflow partial-agg by dst. AnalyticsSpec
-    * pins the claim structurally: no shuffle in the iteration plan has
-    * the edges cache scan beneath it. Ranks are NOT collected — driver
-    * state is nil. */
-  def supplierPagerank(t: Tables, iters: Int = 6): DataFrame = {
-    // customer ids shifted into a disjoint node-id space; 1e12 (the
-    // Snapshot.mergeUpsertQuery rule) because s_suppkey grows 10,000
-    // per SF and would cross a 1e7 offset at SF≈1,000 — silently
-    // conflating supplier and shifted-customer nodes, invisible to the
-    // oracle (which shares the constant)
-    val Offset = 1000000000000L
+    * Scale shape — the canonical Spark PageRank layout, on
+    * [[Fixpoint]]: the edge list is built in SQL (pair-dedup agg), then
+    * partitioned ONCE by source into edge blocks; every round is a
+    * narrow zip of the blocks with the rank state plus one reduceByKey
+    * of node-sized, map-side-combined contributions, so the edge-scale
+    * relation never re-shuffles (AnalyticsSpec pins the lineage). Ranks
+    * are NOT collected — driver state is two counts and, with dangling
+    * nodes, one sum per round. */
+  def supplierPagerank(t: Tables, iters: Int = 6): DataFrame =
+    pagerankOf(supplierEdges(t), iters)
+      .filter(col("node") < CustomerOffset)
+      .select(col("node").as("s_suppkey"), col("r").as("rank_u"))
+      .orderBy("s_suppkey")
+
+  /** Customer ids are shifted into a disjoint node-id space by 1e12 (the
+    * Snapshot.mergeUpsertQuery rule) because s_suppkey grows 10,000 per
+    * SF and would cross a 1e7 offset at SF≈1,000 — silently conflating
+    * supplier and shifted-customer nodes, invisible to the oracle (which
+    * shares the constant). */
+  private val CustomerOffset = 1000000000000L
+
+  /** The supplier_pagerank graph: (src, dst, w) both ways between each
+    * customer and supplier, w = their lineitem count. */
+  private[graft] def supplierEdges(t: Tables): DataFrame = {
     val pairs = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .groupBy("c", "s").agg(count(lit(1)).as("w"))
-    val half = pairs.select((col("c") + Offset).as("src"), col("s").as("dst"), col("w"))
-    val edges0 = half.unionByName(
-      pairs.select(col("s").as("src"), (col("c") + Offset).as("dst"), col("w")))
-    pagerankOf(edges0, iters)
-      .filter(col("node") < Offset)
-      .select(col("node").as("s_suppkey"), col("r").as("rank_u"))
-      .orderBy("s_suppkey")
+    pairs.select((col("c") + CustomerOffset).as("src"), col("s").as("dst"), col("w"))
+      .unionByName(pairs.select(col("s").as("src"),
+        (col("c") + CustomerOffset).as("dst"), col("w")))
   }
 
   /** Library form over any weighted directed edge list (src, dst, w):
@@ -649,136 +649,83 @@ object Analytics {
     * (D·17) div (N·20) per node (exact floor division, so the k-round
     * fixpoint still replays as chained integer CTEs; the ≤N·20-unit
     * floor remainder per round is dropped deterministically, the same
-    * rule as every per-edge contribution). Graphs with no dangling
-    * nodes — detected ONCE from the node-sized cache, one boolean of
-    * driver state — skip the term entirely, keeping their iteration
-    * plan minimal (supplier_pagerank's bipartite symmetric graph takes
-    * this path, so its benched plan and oracle are unchanged).
+    * rule as every per-edge contribution). The node and dangling counts
+    * come from the job that builds the edge blocks; a graph without
+    * dangling nodes (supplier_pagerank's bipartite symmetric graph)
+    * skips the term and runs all k rounds as ONE job, the final state
+    * being the only thing stored. With dangling nodes each round is
+    * stored as it completes, in the job that sums the next round's D.
     *
     * Overflow headroom (the B25 decimal rule, with a guarded fast
     * path): the per-edge numerator r·17·w crosses int64 near
     * r·w ≈ 5.4e17, which a web-scale hub × heavy edge weight can
-    * reach. A per-row bound check (one divide + branch) keeps regular
-    * rows on the original int64 arithmetic — no BigDecimal ever
-    * allocates on a regular graph — and routes only past-the-wrap rows
-    * through decimal(38,0); both branches floor to the identical
-    * micro-unit long below the wrap, and above it the value is exact
-    * instead of silently negative.
+    * reach. A per-edge bound check (one divide + branch) keeps regular
+    * edges on int64 arithmetic — no BigInt ever allocates on a regular
+    * graph — and routes only past-the-wrap edges through BigInt; both
+    * branches floor to the identical micro-unit long below the wrap,
+    * and above it the value is exact instead of silently negative. Sums
+    * are overflow-checked, as Spark's ANSI sums are.
     *
-    * Cache lifecycle: edges/nodes stay persisted after return because
-    * the result's final-round plan still reads them lazily. Spark's
-    * CacheManager keys entries by CANONICALIZED plan, so repeated
-    * invocations over the same input reuse one entry rather than
-    * accumulating; a caller that is done with a given graph releases
-    * it with `df.unpersist()` on its own edges input or
-    * `spark.catalog.clearCache()` — the MEMORY_AND_DISK default means
-    * an unreleased graph degrades to disk, never to OOM. */
-  def pagerankOf(edges0: DataFrame, iters: Int): DataFrame =
-    pagerankOf(edges0, iters, materializeLast = true)
-
-  /** `materializeLast = false` keeps the FINAL round un-checkpointed so
-    * its executed plan exposes one full iteration — the test seam for
-    * the structural no-edge-shuffle pin (AnalyticsSpec). Results are
-    * identical either way; every deploy/bench path takes the default. */
-  private[graft] def pagerankOf(edges0: DataFrame, iters: Int,
-      materializeLast: Boolean): DataFrame = {
-    val outw = edges0.groupBy("src").agg(sum(col("w")).as("wout"))
-    val edges = edges0.join(outw, "src")
-      .repartition(col("src"))
-      .persist()
-    // node universe with the dangling flag, derived from the cached
-    // edges (one exchange; dst-only nodes never appear as src)
-    val nodes = edges.select(col("src").as("node"), lit(1L).as("out"))
-      .unionByName(edges.select(col("dst").as("node"), lit(0L).as("out")))
-      .groupBy("node").agg((max(col("out")) === 0L).as("dangling"))
-      .persist()
-    // model-sized driver scalars, read once from the node-sized cache
-    // (one fused action: count + any-dangling)
-    val meta = nodes.agg(count(lit(1)), max(col("dangling"))).collect()(0)
-    val nTotal = meta.getLong(0)
-    val hasDangling = !meta.isNullAt(1) && meta.getBoolean(1)
-    // fast path: the numerator stays in int64 whenever r·17·w (and the
-    // denominator wout·20) provably fit — one divide + branch per row —
-    // so regular graphs never allocate a BigDecimal; only rows past the
-    // wrap take the decimal tier, with the identical floored value
-    // below it
-    // integer FLOOR division for the bound: double `/` loses precision
-    // above 2^53, misclassifying rows in the rounding band onto the
-    // int64 path where they'd silently wrap; floor-div is conservative
-    val fitsLong = col("r") <=
-      call_function("div", lit(Long.MaxValue / 17L), col("w")) &&
-      col("wout") <= lit(Long.MaxValue / 20L)
-    val ct = when(fitsLong,
-        call_function("div", col("r") * 17L * col("w"), col("wout") * 20L))
-      .otherwise(call_function("div",
-        col("r").cast("decimal(38,0)") * 17L * col("w"),
-        col("wout").cast("decimal(38,0)") * 20L))
-    // ranks stay (node, r) — the dangling flag lives only in the nodes
-    // cache, so the no-dangling iteration plan is byte-identical to the
-    // pre-dangling layout
-    val nodeIds = nodes.select(col("node"))
-    var ranks = nodeIds.withColumn("r", lit(1000000L))
-    // per-round exchanges are edge-contribution-sized: size their
-    // reducer count from the MATERIALIZED edge cache (the meta action
-    // above filled it, so InMemoryRelation stats are actual bytes, not
-    // estimates), never the session constant — the Dedup
-    // connectedComponents rule (guide §2.2) applied to this loop
-    val edgeBytes = {
-      val s = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (s.isValidLong) s.toLong else Long.MaxValue
-    }
-    val spark = edges.sparkSession
-    Dedup.withInitialPartitions(spark,
-      Dedup.sizedShufflePartitions(spark, edgeBytes)) {
-    for (r <- 1 to iters) {
-      val prev = ranks
-      val contrib = edges.join(ranks, col("src") === col("node"))
-        .select(col("dst"), ct.as("ct"))
-        .groupBy("dst").agg(sum(col("ct")).as("inflow"))
-      val base = nodeIds.join(contrib, col("node") === col("dst"), "left")
-      ranks =
-        if (!hasDangling)
-          base.select(col("node"),
-            (lit(150000L) + coalesce(col("inflow"), lit(0L))).as("r"))
-        else {
-          // this round's dangling mass D, redistributed uniformly: a
-          // node-sized agg broadcast back as one row
-          val dmass = ranks
-            .join(nodes.filter(col("dangling")).select("node"), "node")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dsum"))
-          base.crossJoin(broadcast(dmass))
-            .select(col("node"),
-              (lit(150000L) + coalesce(col("inflow"), lit(0L)) +
-                call_function("div",
-                  col("dsum").cast("decimal(38,0)") * 17L,
-                  lit(nTotal * 20L).cast("decimal(38,0)"))).as("r"))
+    * Cache lifecycle: the edge blocks and superseded rounds are freed
+    * before return. The returned DataFrame reads the final round's
+    * checkpointed blocks, the one RDD the call leaves persisted; a
+    * caller that keeps running queries in the same context frees it
+    * once the result is consumed (Bench and the benchmark harness free
+    * every checkpoint a run created). */
+  def pagerankOf(edges0: DataFrame, iters: Int): DataFrame = {
+    val spark = edges0.sparkSession
+    val sc = spark.sparkContext
+    val g = Fixpoint.partition(edges0.select("src", "dst", "w"), undirected = false)
+    try {
+      var ranks = g.initial((_, _) => 1000000L)
+      // this round's dangling mass D: the ranks of nodes without out-edges
+      var dmass = Math.multiplyExact(1000000L, g.sinks)
+      for (r <- 1 to iters) {
+        val prev = ranks
+        val share =
+          if (g.sinks == 0L) 0L
+          else (BigInt(dmass) * 17 / (BigInt(g.nodes) * 20)).toLong
+        ranks = pagerankRound(g, ranks, share)
+        if (g.sinks > 0L || r == iters) {
+          Fixpoint.checkpoint(ranks, None)
+          dmass = sc.runJob(g.blocks.zipPartitions(ranks) { (bs, rs) =>
+            bs.flatMap(b => rs.filter(nr => b.isSink(b.indexOf(nr._1))).map(_._2))
+          }, (it: Iterator[Long]) => it.foldLeft(0L)(Math.addExact))
+            .foldLeft(0L)(Math.addExact)
+          // the superseded round is dead once this one is stored
+          if (g.sinks > 0L && r > 1) prev.unpersist(blocking = false)
         }
-      // checkpoint bounds the lineage between rounds — INCLUDING the
-      // last (round 20 advice): an un-checkpointed final round would
-      // execute lazily after withInitialPartitions restores the
-      // caller's conf, putting one full edge-contribution exchange
-      // back on the constant session width (the exact spill/OOM class
-      // the sizing targets) and dragging the whole iteration lineage
-      // into the returned plan (the 2,194-line supplier_pagerank dump).
-      // Materialized here, the returned plan is rank-sized blocks.
-      if (r < iters || materializeLast) {
-        // stage evidence for PlanDump: the final query plan reads the
-        // last round's blocks, so the per-round iteration plan (the
-        // one the no-edge-shuffle claim is about) is recorded here
-        if (r == 1 || r == iters)
-          graft.tools.StagePlans.record(ranks, s"pagerank/round_$r")
-        ranks = ranks.localCheckpoint()
-        // the superseded round's blocks are dead once the new round is
-        // stored — free them now (ContextCleaner only unpersists on
-        // driver GC, which a big-heap session may not run for the whole
-        // job; the connectedComponents release rule)
-        Dedup.freeLocalCheckpoint(prev)
       }
-    }
-    } // withInitialPartitions — every round, last included, ran sized;
-      // the returned plan reads the final round's materialized blocks
-    ranks
+      if (iters < 1) { // the initial ranks
+        Fixpoint.checkpoint(ranks, None)
+        sc.runJob(ranks, (it: Iterator[(Long, Long)]) => it.size)
+      }
+      spark.createDataFrame(ranks).toDF("node", "r")
+    } finally g.release() // the stored ranks no longer reach the blocks
   }
+
+  /** One exact-integer PageRank round over [[Fixpoint]] blocks: each
+    * node sends (r·17·w) div (20·W_out) along every out-edge, and a node's
+    * new rank is 150,000 + its inflow + `share` (the dangling term). */
+  private[graft] def pagerankRound(g: Fixpoint.Graph,
+      ranks: org.apache.spark.rdd.RDD[(Long, Long)],
+      share: Long): org.apache.spark.rdd.RDD[(Long, Long)] =
+    g.round(ranks) { (b, i, r: Long) =>
+      val (lo, hi) = (b.off(i), b.off(i + 1))
+      var wout = 0L
+      var k = lo
+      while (k < hi) { wout = Math.addExact(wout, b.w(k)); k += 1 }
+      Iterator.single(b.node(i) -> 0L) ++ (lo until hi).iterator.map { k =>
+        val w = b.w(k)
+        // integer FLOOR division for the bound: exact, conservative
+        val ct =
+          if (r <= Long.MaxValue / 17L / w && wout <= Long.MaxValue / 20L)
+            r * 17L * w / (wout * 20L)
+          else (BigInt(r) * 17 * w / (BigInt(wout) * 20)).toLong
+        b.dst(k) -> ct
+      }
+    }(Math.addExact(_: Long, _: Long))
+      .mapValues(in => Math.addExact(Math.addExact(150000L, in), share))
 
   /** C23 — declarative DATA-QUALITY AUDIT (the Deequ/dbt-test role): a
     * catalog of constraint checks — referential integrity, key

@@ -488,10 +488,12 @@ object Dedup {
   /** D6 — near-dup CLUSTERING: the step after pair generation — group
     * near-duplicate documents into connected components and name each by
     * its smallest doc_id (a curation pipeline then keeps one doc per
-    * cluster). Distributed min-label propagation: every iteration is one
-    * join + one min-agg (labels flow along edges until fixpoint), the
-    * standard connected-components shape at 100 TB — no driver-side
-    * graph, O(component diameter) rounds, convergence checked exactly.
+    * cluster). Distributed min-label propagation on [[Fixpoint]]: the
+    * edges are partitioned once and every iteration is one narrow zip
+    * with the labels plus one min-reduce (labels flow along edges until
+    * fixpoint), the standard connected-components shape at 100 TB — no
+    * driver-side graph, O(component diameter) rounds, convergence
+    * checked exactly.
     * Near-dup components are near-cliques, so 2-4 rounds suffice. Oracle:
     * recursive transitive closure over the same pair query. */
   def dedupClusters(t: Tables, maxIters: Int = 50): DataFrame =
@@ -851,7 +853,7 @@ object Dedup {
         sizedShufflePartitions(docs.sparkSession, materializedBytes(hashed))) {
       connectedComponents(nodes, edges, maxIters)
     }
-    // connectedComponents materialized the edge list eagerly before
+    // connectedComponents read the edge list into its edge blocks before
     // returning, so the hashed working set (tokens + signatures — the
     // bulk of the corpus) is fully consumed: free its blocks NOW
     // instead of leaving them to driver GC (the round-3 bench held one
@@ -860,20 +862,6 @@ object Dedup {
     out
   }
 
-  /** Min-label propagation over an undirected pair graph: every node
-    * takes the smallest label among itself and its neighbors until no
-    * label changes (exact fixpoint, checked each round). Each round's
-    * labels are eagerly checkpointed — an iterative plan otherwise
-    * grows exponentially (each round references the previous plan
-    * several times) and OOMs the planner itself.
-    *
-    * `checkpointDir`: None uses localCheckpoint (executor-local blocks —
-    * fastest, right for a single-JVM or preemption-free cluster); Some
-    * writes reliable checkpoints to that directory (object store/DFS),
-    * so a lost executor costs a task retry instead of the whole
-    * iteration history — the right setting for long dedup jobs on spot
-    * instances. The algorithm is identical either way (the spec runs
-    * both). */
   /** Frees the executor blocks behind a localCheckpoint'd frame. A local
     * checkpoint truncates lineage, so freed blocks CANNOT be recomputed —
     * call only once every consumer of the frame has materialized. The
@@ -970,104 +958,93 @@ object Dedup {
 
   /** Monotone per-call id: namespaces each reliable-checkpoint run under
     * its own subdirectory so concurrent/subsequent calls (or any other
-    * df.checkpoint in the same context) never write into a directory
-    * this call deletes. */
+    * checkpoint in the same context) never write into a directory this
+    * call deletes. */
   private val ccCallId = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Min-label propagation over an undirected pair graph: every node
+    * takes the smallest label among itself and its neighbors until no
+    * label changes (exact fixpoint: each round counts the nodes whose
+    * label moved, and a round with none ends the loop; at most
+    * `maxIters` rounds). Runs on [[Fixpoint]]: the pairs are
+    * partitioned once into edge blocks, and each round is one narrow
+    * zip of the blocks with the labels plus one reduceByKey — one job,
+    * which stores the new labels and returns the moved count. Only
+    * nodes that HAVE an edge enter the loop: on a deduped corpus most
+    * documents are isolated, and they rejoin as their own cluster in the
+    * final DataFrame join. Labels start at min(self, direct neighbors),
+    * so near-clique components (the near-dup case) converge in the first
+    * checked round.
+    *
+    * Each round's labels are checkpointed and the superseded round is
+    * released as soon as its successor is stored; only the final round
+    * outlives the call (the returned plan reads it). `checkpointDir`:
+    * None uses local checkpoints (executor-local blocks — fastest, right
+    * for a single-JVM or preemption-free cluster); Some writes reliable
+    * checkpoints under `<dir>/cc_<call>/labels_<round>` (object
+    * store/DFS), so a lost executor costs a task retry instead of the
+    * whole iteration history — the right setting for long dedup jobs on
+    * spot instances. Reliable mode sets the SparkContext's checkpoint
+    * directory per round and restores the caller's on exit, so it stays
+    * single-writer per context during the call; local mode touches no
+    * shared state. The algorithm is identical either way (the spec runs
+    * both). */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
-    // reliable mode mutates the SparkContext-global checkpoint dir per
-    // round; remember the caller's setting and restore it on exit so a
-    // later df.checkpoint elsewhere doesn't land in (and lose to) this
-    // call's tree. Reliable mode remains single-writer per context
-    // DURING the call — concurrent checkpoints interleave directories.
     val prevCheckpointDir = sc.getCheckpointDir
     val callNs = s"cc_${ccCallId.incrementAndGet()}"
-    // every materialization gets its own subdirectory so a SUPERSEDED
-    // round is released as soon as its successor is safely stored —
-    // df.checkpoint never cleans up after itself (cleanCheckpoints is
-    // off by default and GC-driven even when on), and a 50-round run
-    // would otherwise leave 50 full label sets on the object store.
-    // Local mode has the same leak in block storage; release() is its
-    // twin via rdd.unpersist. Only the final round outlives the call
-    // (the returned plan reads it).
-    def materializeIn(df: DataFrame, sub: String): DataFrame = {
-      // plan evidence for the dump tool: the final query plan reads an
-      // ExistingRDD, so the per-stage plans are recorded here (no-op
-      // unless PlanDump enables the capture conf)
-      graft.tools.StagePlans.record(df, s"cc/$sub")
-      checkpointDir match {
-        case Some(root) =>
-          sc.setCheckpointDir(s"$root/$callNs/$sub")
-          df.checkpoint(eager = true)
-        case None => df.localCheckpoint(true)
-      }
+    def dirOf(sub: String) = checkpointDir.map(root => s"$root/$callNs/$sub")
+    // a label state is (node, (min neighbor label, own label)): the
+    // label is their minimum, and the node moved iff the first is
+    // smaller — so one stored value carries both the next round's input
+    // and this round's exact moved count
+    type Labels = org.apache.spark.rdd.RDD[(Long, (Long, Long))]
+    def store(labels: Labels, sub: String): Long = {
+      Fixpoint.checkpoint(labels, dirOf(sub))
+      sc.runJob(labels, (it: Iterator[(Long, (Long, Long))]) =>
+        it.count { case (_, (nbr, own)) => nbr < own }.toLong).sum
     }
-    def release(df: DataFrame, sub: String): Unit = checkpointDir match {
-      case Some(root) =>
-        val p = new org.apache.hadoop.fs.Path(s"$root/$callNs/$sub")
+    def release(labels: Labels, sub: String): Unit = {
+      dirOf(sub).foreach { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
         p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      case None => freeLocalCheckpoint(df)
+      }
+      labels.unpersist(blocking = false)
     }
+    val g = Fixpoint.partition(pairs.toDF("id_a", "id_b"), undirected = true)
     try {
-      val ids = pairs.toDF("id_a", "id_b")
-      val edges = materializeIn(ids
-        .union(ids.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-        .toDF("src", "dst"), "edges")
-      // every per-round join/agg below shuffles edge/label-sized rows;
-      // size their reducer count from the measured edge bytes (free —
-      // the blocks are already stored) instead of the session constant
-      val roundWidth = sizedShufflePartitions(spark, materializedBytes(edges))
-      withInitialPartitions(spark, roundWidth) {
-      // propagate only over nodes that HAVE an edge: on a deduped corpus
-      // the overwhelming majority of documents are isolated and their
-      // label can never change — keeping them out of the loop shrinks
-      // every round's shuffle to the connected subgraph. Isolated nodes
-      // rejoin as their own cluster at the end.
-      // Init at min(self, direct neighbors) — the same one-agg shuffle a
-      // distinct() node list would cost, but it IS the first propagation
-      // round: near-clique components (the near-dup case) then converge
-      // in the first checked round instead of the second.
-      var labelsSub = "labels_init"
-      var labels = materializeIn(
-        edges.groupBy(col("src")).agg(min(col("dst")).as("nbr"))
-          .select(col("src").as("doc_id"),
-            least(col("src"), col("nbr")).as("label")), labelsSub)
-      var converged = false
+      var labels: Labels = g.initial { (b, i) =>
+        var m = b.node(i)
+        var k = b.off(i)
+        while (k < b.off(i + 1)) { m = math.min(m, b.dst(k)); k += 1 }
+        (m, b.node(i))
+      }
+      var moved = -1L
       var it = 0
-      while (!converged && it < maxIters) {
-        // one job per round: the eager checkpoint materializes the new
-        // labels AND the observed change count in the same pass
-        val nbrMin = edges.join(labels, col("dst") === col("doc_id"))
-          .groupBy(col("src")).agg(min(col("label")).as("nbr"))
-        val obs = org.apache.spark.sql.Observation(s"cc_round_$it")
-        val next = materializeIn(
-          labels.join(nbrMin, col("doc_id") === col("src"), "left")
-            .select(col("doc_id"),
-              least(col("label"), col("nbr")).as("label"),
-              (col("nbr") < col("label")).as("moved"))
-            .observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n_moved"))
-            .select("doc_id", "label"),
-          s"labels_$it")
-        release(labels, labelsSub) // superseded round — next is stored
+      while (moved != 0L && it < maxIters) {
+        val next = g.round(labels) { (b, i, l: (Long, Long)) =>
+          val label = math.min(l._1, l._2)
+          Iterator.single(b.node(i) -> (Long.MaxValue, label)) ++
+            (b.off(i) until b.off(i + 1)).iterator.map(k => b.dst(k) -> (label, Long.MaxValue))
+        } { (x, y) => (math.min(x._1, y._1), math.min(x._2, y._2)) }
+        moved = store(next, s"labels_$it")
+        if (it > 0) release(labels, s"labels_${it - 1}") // superseded
         labels = next
-        labelsSub = s"labels_$it"
-        converged = obs.get("n_moved") == null ||
-          obs.get("n_moved").asInstanceOf[Long] == 0L
         it += 1
       }
-      release(edges, "edges") // the returned plan reads only the last labels
+      if (it == 0) store(labels, "labels_init") // maxIters = 0
+      val out = labels.map { case (n, (nbr, own)) => (n, math.min(nbr, own)) }
       nodes.toDF("doc_id")
-        .join(labels, Seq("doc_id"), "left")
+        .join(spark.createDataFrame(out).toDF("doc_id", "label"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("label"), col("doc_id")).as("cluster_id"))
         .orderBy("doc_id")
-      } // withInitialPartitions — the returned plan executes under the
-        // caller's conf (its exchanges are final-label-sized)
     } finally {
-      // restore the caller's checkpoint dir so later df.checkpoint calls
+      // the stored labels no longer reach the edge blocks
+      g.release()
+      // restore the caller's checkpoint dir so later checkpoints
       // elsewhere never land in a directory this call deletes; if the
       // caller had none, park it on this call's (now-quiescent) namespace
       // — stable, never deleted after the call returns

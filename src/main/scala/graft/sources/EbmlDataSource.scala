@@ -51,11 +51,13 @@ class EbmlDataSource extends TableProvider with DataSourceRegister {
     val path = properties.get("path")
     require(path != null && path.nonEmpty,
       "ebml source requires a single directory or file path: .load(dir)")
-    // capture the OWNING session's Hadoop conf here, at resolution time
-    // on its planning thread — resolving SparkSession.active later
-    // inside the scan can pick up a different thread's session in
+    // capture the OWNING session's Hadoop conf and file-split settings
+    // here, at resolution time (the analyzer resolves the relation
+    // inside the reading session) — resolving SparkSession.active later,
+    // when a scan is built, can pick up a different thread's session in
     // multi-session applications (round-4 self-review finding)
-    new EbmlTable(path, HadoopConfShip.capture(SparkSession.active))
+    val spark = SparkSession.active
+    new EbmlTable(path, HadoopConfShip.capture(spark), EbmlSplit.of(spark))
   }
 }
 
@@ -76,39 +78,39 @@ object EbmlTable {
     StructField("blob", BinaryType, nullable = false)))
 }
 
-class EbmlTable(path: String, confEntries: Array[(String, String)])
-    extends Table with SupportsRead {
+class EbmlTable(path: String, confEntries: Array[(String, String)],
+    split: EbmlSplit) extends Table with SupportsRead {
   override def name(): String = s"ebml:$path"
   override def schema(): StructType = EbmlTable.Schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // split sizing (round 21, guide §6): an explicit `maxPartitionBytes`
-    // load option keeps the original pure-bytes packing (the documented
-    // option contract); otherwise the scan follows the SESSION's file
-    // split settings exactly like Spark's own FilePartition — including
-    // the minPartitionNum ⇒ defaultParallelism floor, so an archive
-    // smaller than one default split still fans out across the cores
-    // instead of walking every payload in a single task (the bench's
-    // 63 MB/1,000-file sf0.1 archive read as ONE task under the old
-    // fixed 128 MB default).
-    val sessionConf = SparkSession.active.sessionState.conf
+  // split sizing (round 21, guide §6): an explicit `maxPartitionBytes`
+  // load option keeps the original pure-bytes packing (the documented
+  // option contract); otherwise the scan follows the owning session's
+  // file split settings exactly like Spark's own FilePartition —
+  // including the minPartitionNum ⇒ defaultParallelism floor, so an
+  // archive smaller than one default split still fans out across the
+  // cores instead of walking every payload in a single task (the
+  // bench's 63 MB/1,000-file sf0.1 archive read as ONE task under the
+  // old fixed 128 MB default).
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EbmlScanBuilder(path,
-      Option(options.get("maxPartitionBytes")).map(_.toLong),
-      EbmlSplit(
-        sessionConf.filesMaxPartitionBytes,
-        sessionConf.filesOpenCostInBytes,
-        sessionConf.filesMinPartitionNum.getOrElse(
-          SparkSession.active.sparkContext.defaultParallelism)),
-      confEntries)
-  }
+      Option(options.get("maxPartitionBytes")).map(_.toLong), split, confEntries)
 }
 
-/** Session file-split settings captured at planning time — the inputs
-  * of Spark's own `FilePartition.maxSplitBytes` formula. */
+/** Session file-split settings captured with the table — the inputs of
+  * Spark's own `FilePartition.maxSplitBytes` formula. */
 case class EbmlSplit(maxPartitionBytes: Long, openCostInBytes: Long,
     minPartitionNum: Int)
+
+object EbmlSplit {
+  def of(spark: SparkSession): EbmlSplit = {
+    val conf = spark.sessionState.conf
+    EbmlSplit(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+      conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism))
+  }
+}
 
 class EbmlScanBuilder(path: String, explicitMaxBytes: Option[Long],
     split: EbmlSplit, confEntries: Array[(String, String)])

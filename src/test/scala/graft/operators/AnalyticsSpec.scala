@@ -209,61 +209,40 @@ class AnalyticsSpec extends SparkSpec {
     assert((2L to 5L).forall(s => rs(1L) > rs(s)),
       s"hub must outrank spokes: $rs")
     assert((2L to 5L).map(rs).distinct.size == 1, "spokes are symmetric")
-    // structural pin on one full iteration: the EDGE relation is served
-    // from its cache and sits beneath NO shuffle — per round only
-    // node-sized data moves (rank table + inflow agg). The deploy path
-    // checkpoints EVERY round (round-20 advice: the last round must run
-    // under the sized width too), so the iteration plan is inspected
-    // through the materializeLast=false test seam, whose last round is
-    // the same plan every checkpointed round executed. String counting
-    // can't express this (the cached relation's internal build plan
-    // renders its own exchanges), so walk the executed tree, treating
-    // cache scans as leaves and descending through AQE wrappers and
-    // query stages.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val Offset = 1000000000000L
-    val pairs = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .groupBy("c", "s").agg(count(lit(1)).as("w"))
-    val edges0 = pairs
-      .select((col("c") + Offset).as("src"), col("s").as("dst"), col("w"))
-      .unionByName(pairs.select(col("s").as("src"),
-        (col("c") + Offset).as("dst"), col("w")))
-    val df = Analytics.pagerankOf(edges0, 6, materializeLast = false)
-    val seam = df.collect() // finalize AQE before inspecting
-    // the seam computes EXACTLY what the deploy form computes — the
-    // final checkpoint is a materialization choice, not an algorithm
-    val deploy = Analytics.pagerankOf(edges0, 6).collect()
-    assert(seam.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      deploy.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      "materializeLast must not change pagerank results")
-    def kids(n: SparkPlan): Seq[SparkPlan] = n match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case o => o.children
-    }
-    def isEdgesScan(n: SparkPlan): Boolean =
-      n.nodeName.contains("InMemoryTableScan") &&
-        n.output.exists(_.name == "wout")
-    // root-to-scan path: raw edge rows must reach their first (partial)
-    // aggregate without crossing any shuffle — after map-side combine
-    // the flow is node-sized, so shuffles above the aggregate are fine,
-    // as is a BroadcastExchange (small-SF artifact: broadcast is not a
-    // repartition of the edge relation)
-    def pathTo(n: SparkPlan): Option[List[SparkPlan]] =
-      if (isEdgesScan(n)) Some(List(n))
-      else kids(n).view.flatMap(k => pathTo(k).map(n :: _)).headOption
-    val path = pathTo(df.queryExecution.executedPlan)
-    assert(path.isDefined, "edges must be served from cache")
-    val upward = path.get.reverse.drop(1)
-      .takeWhile(n => !n.nodeName.contains("HashAggregate"))
-    assert(!upward.exists(_.isInstanceOf[ShuffleExchangeLike]),
-      s"raw edge rows cross a shuffle before aggregation:\n" +
-        df.queryExecution.executedPlan.toString)
+    // structural pin on the round lineage (edges never re-shuffle): the
+    // edge blocks cross exactly ONE shuffle — the initial partitioning by
+    // source — and every round reads them through a OneToOneDependency
+    // and adds exactly one ShuffleDependency (the node-sized, map-side
+    // combined contributions). The graph is the deploy query's own edge
+    // builder, so the pin cannot drift from supplier_pagerank.
+    import org.apache.spark.{Dependency, OneToOneDependency, ShuffleDependency}
+    import org.apache.spark.rdd.RDD
+    def deps(r: RDD[_], stop: RDD[_] => Boolean): Seq[Dependency[_]] =
+      if (stop(r)) Nil else r.dependencies.flatMap(d => d +: deps(d.rdd, stop))
+    def shuffles(ds: Seq[Dependency[_]]) = ds.count(_.isInstanceOf[ShuffleDependency[_, _, _]])
+    val g = Fixpoint.partition(Analytics.supplierEdges(t), undirected = false)
+    try {
+      // walk the blocks' lineage down to where it leaves SQL (the edge
+      // list's own joins and aggregate are not the loop's)
+      val fromSql = (r: RDD[_]) => r.getClass.getName.startsWith("org.apache.spark.sql.")
+      assert(shuffles(deps(g.blocks, fromSql)) == 1,
+        "edge blocks must cross exactly one shuffle, the initial partitioning")
+      assert(g.sinks == 0L, "the bipartite symmetric graph has no dangling node")
+      var ranks = g.initial((_, _) => 1000000L)
+      for (r <- 1 to 3) {
+        val prev = ranks
+        ranks = Analytics.pagerankRound(g, prev, 0L)
+        val round = deps(ranks, x => (x eq prev) || (x eq g.blocks))
+        assert(shuffles(round) == 1, s"round $r: ${shuffles(round)} shuffles")
+        Seq(g.blocks, prev).foreach(p => assert(round.exists(d =>
+          d.isInstanceOf[OneToOneDependency[_]] && (d.rdd eq p)),
+          s"round $r must read ${p} through a OneToOneDependency"))
+      }
+      // the hand-driven rounds ARE the library's rounds
+      val deploy = Analytics.pagerankOf(Analytics.supplierEdges(t), 3).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ranks.collect().toMap == deploy)
+    } finally g.release()
   }
 
   test("pagerank: dangling-node mass redistributes exactly (BigInt replay); numerator survives the int64 wrap") {

@@ -284,9 +284,10 @@ class DedupSpec extends SparkSpec {
     def run() = Dedup.connectedComponents(nodes, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = run()
-    // a 64-byte target forces the loop's width far above the session's 4
-    // — partitioning is the ONLY thing that may change
-    spark.conf.set("spark.graft.shuffle.targetPartitionBytes", "64")
+    // an 8-byte target forces the loop's width far above the session's 4
+    // (the 9 pairs pack into 144 bytes: 19 partitions) — partitioning is
+    // the ONLY thing that may change
+    spark.conf.set("spark.graft.shuffle.targetPartitionBytes", "8")
     try assert(run() == base)
     finally spark.conf.unset("spark.graft.shuffle.targetPartitionBytes")
   }

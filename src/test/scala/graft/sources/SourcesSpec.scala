@@ -317,6 +317,43 @@ class SourcesSpec extends SparkSpec {
       s"expected ~defaultParallelism($par) tasks, got $parts")
   }
 
+  test("ebml source: two sessions with different file-split conf each get their own split count") {
+    val dir = tmp() + "/frags_two_sessions"
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    val frag = graft.ebml.EbmlFunctions.buildFragment(9L, 9000L, 9L, 9L, "x")
+    (0 until 40).foreach(i =>
+      Files.write(java.nio.file.Paths.get(dir, f"f$i%02d.mkv"), frag))
+    // a 1-byte split cap gives every payload file its own task; the
+    // default cap packs 40 small files into about defaultParallelism
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.files.maxPartitionBytes", "1")
+    val wide = spark.newSession()
+    def splits(s: org.apache.spark.sql.SparkSession) =
+      s.read.format("ebml").load(dir).rdd.getNumPartitions
+    assert(splits(narrow) == 40)
+    assert(splits(wide) < 40)
+    // the settings are the TABLE's, captured when its session resolved
+    // it: a scan built while another session is active still splits by
+    // the owning session's conf
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val opts = CaseInsensitiveStringMap.empty()
+    def tableOf(s: SparkSession) = {
+      SparkSession.setActiveSession(s)
+      new EbmlDataSource().getTable(EbmlTable.Schema, Array.empty,
+        java.util.Map.of("path", dir)).asInstanceOf[EbmlTable]
+    }
+    try {
+      val (tn, tw) = (tableOf(narrow), tableOf(wide))
+      SparkSession.setActiveSession(wide)
+      def planned(tb: EbmlTable) =
+        tb.newScanBuilder(opts).build().toBatch.planInputPartitions().length
+      assert(planned(tn) == 40, "narrow table split by the active session's conf")
+      SparkSession.setActiveSession(narrow)
+      assert(planned(tw) == splits(wide), "wide table split by the active session's conf")
+    } finally SparkSession.setActiveSession(spark)
+  }
+
   test("dpp join: the fact scan carries an injected dynamicpruning filter and reads ONLY qualifying day dirs (H17)") {
     import org.apache.spark.sql.functions._
     val df = graft.sources.Layout.dppJoinQuery(t, sfDir)
